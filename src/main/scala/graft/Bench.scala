@@ -3,7 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Bench main — driver contract: one JSON line
-  * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
+  * {"metric":"total","value":N,"unit":"sec","queries":{...},
+  *  "n_failed":K,"failed":[...],"sf":...}.
+  * A face that throws in any measured pass reports -1.0, is left out of
+  * `value`, and is counted in `n_failed` and named in `failed` (the
+  * bracketing headline carries both too); `tools/benchgate.py` fails
+  * such a run.
   *
   * Each query is fully materialized through the noop sink (forces every
   * operator, unlike count() which lets Catalyst prune aggregates away).
@@ -288,11 +293,20 @@ object Bench {
     sharedExact.foreach(_.unpersist(blocking = false))
 
     var best = Map.empty[String, Double]
+    // a face that throws in ANY measured pass is failed: it reports -1.0
+    // even if another pass succeeded, and the headline names it, so a
+    // gate cannot pass a run whose total silently lost a face
+    var failed = Set.empty[String]
     def emit(): Unit = {
-      val results = names.map(n => n -> best.getOrElse(n, -1.0))
+      val results = names.map(n =>
+        n -> (if (failed(n)) -1.0 else best.getOrElse(n, -1.0)))
       val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")
       val total = results.map(_._2).filter(_ >= 0).sum
+      val failedNames = results.collect { case (n, v) if v < 0 => n }
+      val failedField =
+        s""","n_failed":${failedNames.size},"failed":""" +
+          failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
       val recallField = recalls.map { case (n, v) => s""","$n":$v""" }.mkString
       // headline emitted BOTH before and after the (long) per-query line:
       // the driver's artifact keeps the TAIL, so a leading headline is
@@ -320,9 +334,9 @@ object Bench {
         if (nPasses >= 3) "quiet-min-of-" + nPasses
         else "driver-hot-single-pass; adjudicate vs tools/bench_local_r{N}.json (min-of-3)"
       val headline =
-        s"""{"total_s":$total,"n_queries":${results.count(_._2 >= 0)},"sf":${jstr(sfDir)},"full_map":${jstr(mapPath)},"protocol":${jstr(protocol)}}"""
+        s"""{"total_s":$total,"n_queries":${results.count(_._2 >= 0)}$failedField,"sf":${jstr(sfDir)},"full_map":${jstr(mapPath)},"protocol":${jstr(protocol)}}"""
       val full =
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":${jstr(sfDir)}$recallField,"protocol":${jstr(protocol)}}"""
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$failedField,"sf":${jstr(sfDir)}$recallField,"protocol":${jstr(protocol)}}"""
       // round-15 verdict #1 (PERF parse determinism): the driver's
       // round-over-round comparison needs the line WITH the per-query
       // map, so the full-map line is ALSO the LAST line emitted. The
@@ -358,7 +372,8 @@ object Bench {
       names.foreach { n =>
         val t = run(n)
         System.err.println(f"[bench] pass $pass $n%-36s $t%7.3f s")
-        if (t >= 0 && best.get(n).forall(t < _)) best += (n -> t)
+        if (t < 0) failed += n
+        else if (best.get(n).forall(t < _)) best += (n -> t)
       }
       emit()
     }

@@ -2043,26 +2043,24 @@ object SparkEntry {
     }),
 
     // the nightly-state lifecycle: three ingestion batches folded into
-    // a DURABLE sketch store (read-merge-AtomicStore-swap per fold),
+    // a DURABLE sketch store (one exactly-once fold commit each),
     // quantiles read off the final stored table — must equal the
     // one-shot sketch over full history (oracle text shared VERBATIM
     // with q_quantile_sketch, the store-lifecycle analogue of the
     // in-memory merged face)
     "q_quantile_sketch_stored" -> ((s, dir) => {
       val root = s"$scratchRoot/graft_qsketch_store_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      // reset the WHOLE AtomicStore footprint, not just the table root:
-      // a stale _SUCCESS-stamped .staging from a prior crashed run would
-      // otherwise be promoted by recover() and seed the "fresh" replay
-      // with old counts (round-13 advice)
-      Seq(root, root + ".staging", root + ".old", root + ".lock").foreach { p =>
+      // reset the store (manifests and data dirs live under the root)
+      // and its writer lock
+      Seq(root, root + ".lock").foreach { p =>
         val hp = new org.apache.hadoop.fs.Path(p)
         hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
       }
       val o = t(s, dir, "orders")
       (0 to 2).foreach { i =>
         // fold batch 1 TWICE: the re-delivery must be a ledger no-op
-        // for this to keep matching the one-shot oracle (round-13
-        // verdict #3 — the exactly-once claim rides the shared oracle)
+        // for this to keep matching the one-shot oracle (the
+        // exactly-once claim rides the shared oracle)
         val reps = if (i == 1) 2 else 1
         (1 to reps).foreach { _ =>
           QuantileSketch.foldIntoStore(s,
@@ -2168,10 +2166,10 @@ object SparkEntry {
         .orderBy("event_type")
     }),
 
-    // streaming deployment of the same store: three feed files drained
-    // one per micro-batch (maxFilesPerTrigger=1), each folded into the
-    // durable store via foreachBatch + AtomicStore — the drained store,
-    // finalized, must hash-equal the SAME one-shot full-history oracle
+    // streaming deployment of the same store: three feed slices drained
+    // one per micro-batch, each folded into the durable bucketed fold
+    // store via foreachBatch — the drained store, finalized, must
+    // hash-equal the SAME one-shot full-history oracle
     "q_stream_incremental_agg" -> ((s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("user_id"),
@@ -2182,12 +2180,9 @@ object SparkEntry {
       val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(root, true)
       // feed cached per sf dir outside the timed region (see the
-      // quantile-sketch face); store + checkpoint reset per run.
-      // Since round 15 the store is a BUCKETED fold store: each
-      // micro-batch rewrites only the hash buckets its keys touch
-      // (O(delta), round-14 verdict #1) and the ledger check is a
-      // driver-side manifest lookup — the oracle is unchanged, the
-      // per-batch swap cost is what moved.
+      // quantile-sketch face); store + checkpoint reset per run. Each
+      // micro-batch rewrites only the hash buckets its keys touch and
+      // the ledger check is a manifest lookup, no Spark job.
       val feed = cachedFeed(s, s"graft_feed_incr8_$san",
           srcToken(s, dir, "events")) { feedDir =>
         (0 to 2).foreach { i =>
@@ -2196,7 +2191,7 @@ object SparkEntry {
         }
       }
       val store = s"$root/store"
-      val q = graft.streaming.StreamingIncrementalAgg.startBucketed(s,
+      val q = graft.streaming.StreamingIncrementalAgg.start(s,
         s.readStream.schema(ev.schema).option("maxFilesPerTrigger", "8")
           .parquet(feed),
         store, Seq("event_type"), "value", "user_id", k = 32,
@@ -2212,8 +2207,8 @@ object SparkEntry {
         .orderBy("event_type")
     }),
 
-    // the BATCH face of the bucketed O(delta) fold store (round-14
-    // verdict #1): three nightly deltas folded in with batch 1
+    // the BATCH face of the bucketed O(delta) fold store: three nightly
+    // deltas folded in with batch 1
     // deliberately RE-DELIVERED (exactly-once no-op), the ledger then
     // COMPACTED to a watermark and batch 0 re-delivered AGAIN (the
     // pre-watermark id must stay a no-op) — after all of which the
@@ -3259,6 +3254,36 @@ object SparkEntry {
          AND NOT EXISTS (SELECT 1 FROM orders o2
                          WHERE o2.o_custkey = c.c_custkey AND o2.o_orderpriority = '5-LOW')
        ORDER BY c_custkey"""
+
+  /** Oracle of the incremental-agg family (`q_incremental_agg`,
+    * `q_fold_bucketed_store`, `q_stream_incremental_agg`): the one-shot
+    * full-history aggregate, KMV distinct estimate included. The batch
+    * merge, the bucketed fold store (across a re-delivery and a ledger
+    * compaction) and the streaming fold must all reproduce it exactly —
+    * KMV union is exactly mergeable, so the shared text IS the check.
+    */
+  private val incrementalAggOracle: String =
+    """WITH base AS (SELECT event_type, COUNT(*) AS n,
+                CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total,
+                MIN(value) AS "min", MAX(value) AS "max",
+                round(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE)
+                        / CAST(COUNT(*) AS DOUBLE), 6) AS avg
+              FROM events GROUP BY 1),
+         v AS (SELECT DISTINCT event_type,
+                 CAST(CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 13) AS BIGINT) AS DOUBLE)
+                   / 4503599627370496.0 AS v
+               FROM events),
+         r AS (SELECT event_type, v,
+                 row_number() OVER (PARTITION BY event_type ORDER BY v) AS rn
+               FROM v),
+         sk AS (SELECT event_type, COUNT(*) AS sz, MAX(v) AS vk
+                FROM r WHERE rn <= 32 GROUP BY 1),
+         est AS (SELECT event_type,
+                   CASE WHEN sz < 32 THEN CAST(sz AS DOUBLE)
+                        ELSE round(31.0 / vk, 6) END AS est_distinct
+                 FROM sk)
+         SELECT b.event_type, n, total, "min", "max", avg, est_distinct
+         FROM base b JOIN est USING (event_type) ORDER BY b.event_type"""
 
   /** Shared by `q_sim_covariance` (one-shot pass) and
     * `q_sim_covariance_incremental` (three merged batch partials) — the
@@ -6020,77 +6045,14 @@ object SparkEntry {
 
     // one-shot aggregate over FULL history == the incrementally merged
     // store (mergeable-state algebra; KMV union is exactly mergeable)
-    "q_incremental_agg" ->
-      """WITH base AS (SELECT event_type, COUNT(*) AS n,
-                CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total,
-                MIN(value) AS "min", MAX(value) AS "max",
-                round(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE)
-                        / CAST(COUNT(*) AS DOUBLE), 6) AS avg
-              FROM events GROUP BY 1),
-         v AS (SELECT DISTINCT event_type,
-                 CAST(CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 13) AS BIGINT) AS DOUBLE)
-                   / 4503599627370496.0 AS v
-               FROM events),
-         r AS (SELECT event_type, v,
-                 row_number() OVER (PARTITION BY event_type ORDER BY v) AS rn
-               FROM v),
-         sk AS (SELECT event_type, COUNT(*) AS sz, MAX(v) AS vk
-                FROM r WHERE rn <= 32 GROUP BY 1),
-         est AS (SELECT event_type,
-                   CASE WHEN sz < 32 THEN CAST(sz AS DOUBLE)
-                        ELSE round(31.0 / vk, 6) END AS est_distinct
-                 FROM sk)
-         SELECT b.event_type, n, total, "min", "max", avg, est_distinct
-         FROM base b JOIN est USING (event_type) ORDER BY b.event_type""",
+    "q_incremental_agg" -> incrementalAggOracle,
 
     // identical contract for the bucketed O(delta) fold store, across a
     // re-delivery AND a ledger compaction (oracle shared VERBATIM)
-    "q_fold_bucketed_store" ->
-      """WITH base AS (SELECT event_type, COUNT(*) AS n,
-                CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total,
-                MIN(value) AS "min", MAX(value) AS "max",
-                round(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE)
-                        / CAST(COUNT(*) AS DOUBLE), 6) AS avg
-              FROM events GROUP BY 1),
-         v AS (SELECT DISTINCT event_type,
-                 CAST(CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 13) AS BIGINT) AS DOUBLE)
-                   / 4503599627370496.0 AS v
-               FROM events),
-         r AS (SELECT event_type, v,
-                 row_number() OVER (PARTITION BY event_type ORDER BY v) AS rn
-               FROM v),
-         sk AS (SELECT event_type, COUNT(*) AS sz, MAX(v) AS vk
-                FROM r WHERE rn <= 32 GROUP BY 1),
-         est AS (SELECT event_type,
-                   CASE WHEN sz < 32 THEN CAST(sz AS DOUBLE)
-                        ELSE round(31.0 / vk, 6) END AS est_distinct
-                 FROM sk)
-         SELECT b.event_type, n, total, "min", "max", avg, est_distinct
-         FROM base b JOIN est USING (event_type) ORDER BY b.event_type""",
+    "q_fold_bucketed_store" -> incrementalAggOracle,
 
     // identical contract for the streaming deployment of the store
-    "q_stream_incremental_agg" ->
-      """WITH base AS (SELECT event_type, COUNT(*) AS n,
-                CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total,
-                MIN(value) AS "min", MAX(value) AS "max",
-                round(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE)
-                        / CAST(COUNT(*) AS DOUBLE), 6) AS avg
-              FROM events GROUP BY 1),
-         v AS (SELECT DISTINCT event_type,
-                 CAST(CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 13) AS BIGINT) AS DOUBLE)
-                   / 4503599627370496.0 AS v
-               FROM events),
-         r AS (SELECT event_type, v,
-                 row_number() OVER (PARTITION BY event_type ORDER BY v) AS rn
-               FROM v),
-         sk AS (SELECT event_type, COUNT(*) AS sz, MAX(v) AS vk
-                FROM r WHERE rn <= 32 GROUP BY 1),
-         est AS (SELECT event_type,
-                   CASE WHEN sz < 32 THEN CAST(sz AS DOUBLE)
-                        ELSE round(31.0 / vk, 6) END AS est_distinct
-                 FROM sk)
-         SELECT b.event_type, n, total, "min", "max", avg, est_distinct
-         FROM base b JOIN est USING (event_type) ORDER BY b.event_type""",
+    "q_stream_incremental_agg" -> incrementalAggOracle,
 
     "q_t3_set_ops" ->
       """WITH cust AS (SELECT c_mktsegment AS seg, c_nationkey AS nk FROM customer),

@@ -67,7 +67,7 @@ import org.apache.spark.sql.functions._
   * int64→double cast identically (hashes keep matching), but the
   * "exact integer through ONE IEEE division" guarantee degrades to
   * correctly-rounded. Values AT or beyond the DECIMAL(18,6) range
-  * (|x| ≥ 10¹²) no longer throw (round-13 verdict #4): the VARCHAR hop
+  * (|x| ≥ 10¹²) do not throw: the VARCHAR hop
   * uses `try_cast`, and the nulled-out micros route to an explicit
   * ±overflow bucket (e=19, lo=10¹⁸, w=0 — disjoint from every real
   * bucket, whose max e is 17) so one stray 1e13 on a 100 TB profiling
@@ -124,6 +124,10 @@ object QuantileSketch {
       .drop("__v")
   }
 
+  /** The key of one sketch row: the group plus its bucket. */
+  private def sketchKeys(groupCols: Seq[String]): Seq[String] =
+    groupCols ++ Seq("s", "e", "d", "lo", "w")
+
   /** Build the sketch: one narrow scan → bucket counts.
     * Output: groupCols ++ (s, e, d, lo, w, cnt). The groupBy exchange
     * carries O(groups × 3.2k) rows at ANY corpus size — partial
@@ -143,7 +147,7 @@ object QuantileSketch {
         (expr("try_cast(CAST(__v AS STRING) AS decimal(18,6))") *
           lit(1000000)).cast("long"))
     withBuckets(keyed)
-      .groupBy((groupCols ++ Seq("s", "e", "d", "lo", "w")).map(col): _*)
+      .groupBy(sketchKeys(groupCols).map(col): _*)
       .agg(count(lit(1)).as("cnt"))
   }
 
@@ -157,45 +161,42 @@ object QuantileSketch {
     */
   def merge(a: DataFrame, b: DataFrame, groupCols: Seq[String]): DataFrame =
     a.unionByName(b)
-      .groupBy((groupCols ++ Seq("s", "e", "d", "lo", "w")).map(col): _*)
+      .groupBy(sketchKeys(groupCols).map(col): _*)
       .agg(sum(col("cnt")).as("cnt"))
 
   /** Nightly-state lifecycle: fold one ingestion batch's sketch into a
-    * durable store table — sketch today's batch, merge with the stored
-    * state, crash-safe `AtomicStore` swap, all under the writer lock
-    * (the [[graft.streaming.StreamingIncrementalAgg]] fold discipline).
-    * The store stays bucket-count-sized (≤3.2k rows per group) however
-    * much history it summarizes, and any reader ([[readStore]]) can take
-    * quantiles off it between folds without touching the corpus.
+    * durable store — sketch the batch, merge it with the stored state
+    * and commit, all under the writer lock. The store stays
+    * bucket-count-sized (≤3.2k rows per group) however much history it
+    * summarizes, and any reader ([[readStore]]) can take quantiles off
+    * it between folds without touching the corpus.
     *
-    * EXACTLY-ONCE under batch re-delivery (round-13 verdict #3): the
-    * stored table carries its own processed-batch LEDGER — one marker
-    * row per folded `batchId` (all sketch columns null, `__batch_id`
-    * set) riding in the same parquet table as the bucket counts, so the
-    * single crash-safe swap commits the new counts AND the ledger entry
-    * atomically; there is no window where the counts landed but the
-    * ledger did not. A re-delivered `batchId` is detected under the
-    * writer lock and the fold is a no-op, so a retried nightly pipeline
+    * EXACTLY-ONCE per `batchId`: the fold goes through
+    * [[graft.pipelines.BucketedFoldStore.foldOnce]] with one bucket, so
+    * each fold rewrites the whole (sketch-sized) state and one manifest
+    * commit makes the new counts and the ledger entry visible together.
+    * A re-delivered `batchId` is a no-op, so a retried nightly pipeline
     * (or a restarted foreachBatch stream, whose micro-batch ids Spark
-    * re-delivers verbatim) can call this blindly. The ledger grows one
-    * marker row per batch — 365 rows/year against a ≤3.2k-rows/group
-    * state, trimmed-by-compaction territory only after decades.
+    * re-delivers verbatim) can call this blindly. The fold keys are the
+    * bucket key `groupCols ++ (s, e, d, lo, w)`, on which [[merge]] is
+    * key-local; they are non-empty even without group columns.
     */
   def foldIntoStore(spark: org.apache.spark.sql.SparkSession,
                     batch: DataFrame, valueCol: String,
                     groupCols: Seq[String], storePath: String,
                     batchId: String): Unit = {
-    graft.pipelines.AtomicStore.foldOnce(spark, storePath, batchId,
-      build(batch, valueCol, groupCols))(merge(_, _, groupCols))
+    graft.pipelines.BucketedFoldStore.foldOnce(spark, storePath, batchId,
+      build(batch, valueCol, groupCols), sketchKeys(groupCols),
+      numBuckets = 1)(merge(_, _, groupCols))
     ()
   }
 
-  /** The sketch state of a [[foldIntoStore]] table: bucket-count rows
-    * only, ledger markers stripped — the frame [[quantiles]] reads.
+  /** The sketch state of a [[foldIntoStore]] store: the bucket-count
+    * rows of its current generation — the frame [[quantiles]] reads.
     */
   def readStore(spark: org.apache.spark.sql.SparkSession,
                 storePath: String): DataFrame =
-    graft.pipelines.AtomicStore.readState(spark, storePath)
+    graft.pipelines.BucketedFoldStore.readState(spark, storePath)
 
   /** Read quantile estimates off a sketch. For each requested fraction
     * q the answer is the midpoint of the bucket holding the

@@ -3,50 +3,43 @@ package graft.pipelines
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Crash-safe overwrite for plain-parquet store tables.
+/** Crash-safe overwrite and writer lock for plain-parquet store tables.
   *
   * Plain parquet has no transaction log, and `mode(Overwrite)` on the
-  * live path is delete-then-write: a crash mid-write loses the WHOLE
-  * table (round-2 review finding on the upsert sinks). This helper
-  * restores the classic durability shape a MERGE-capable table format
-  * would give for free:
+  * live path is delete-then-write: a crash mid-write would lose the
+  * whole table. [[overwrite]] instead
   *
-  *   1. write the new contents to `{path}.staging` (durable storage,
-  *      NOT a localCheckpoint — executor loss cannot lose the data);
-  *   2. rename live → `{path}.old`, staging → live (two metadata-only
+  *   1. writes the new contents to `{path}.staging` (durable storage,
+  *      not a localCheckpoint — executor loss cannot lose the data);
+  *   2. renames live → `{path}.old`, staging → live (two metadata-only
   *      renames, no data copy);
-  *   3. drop `{path}.old`.
+  *   3. drops `{path}.old`.
   *
-  * Failure at any step leaves a complete copy of the table on disk:
-  * before step 2 the live path is untouched; between the renames the
-  * finished staging copy exists; [[recover]] rolls the store forward
-  * (prefer staging — it is the completed newer merge) and is idempotent,
-  * so a restarted job just calls it before reading.
+  * Invariant: after a crash at any step a complete copy of the table is
+  * on disk. Before step 2 the live path is untouched; between the
+  * renames the finished staging copy exists. [[recover]] rolls the
+  * store forward (staging, once stamped `_SUCCESS`, is the completed
+  * newer merge) and is idempotent, so a restarted job calls it before
+  * reading.
   *
-  * CONCURRENCY (round-8 verdict #5, hardened round 10): writers
-  * serialize on a `{path}.lock` file with LEASE semantics. Acquisition
-  * uses a genuinely atomic create — `O_CREAT|O_EXCL` via NIO on local
-  * filesystems (Hadoop's `RawLocalFileSystem.create(overwrite=false)`
-  * is a non-atomic exists-then-create, so two racing local writers
-  * could both "win" it), `fs.create(…, false)` on HDFS-semantics
-  * stores where it IS atomic. A blocked writer retries with bounded
-  * backoff ([[withLock]]) instead of failing on first contact; a lock
-  * whose holder crashed is STOLEN once its lease (file mtime) expires,
-  * so an orphaned lock no longer needs a manual [[recover]]. Stealing
-  * is itself ATOMIC (round 11): the expired lock is renamed aside to a
-  * stealer-unique name before removal — exactly one racing stealer's
-  * rename succeeds, and the subsequent create still races fairly with
-  * fresh acquirers, so no interleaving can delete a LIVE lock another
-  * stealer just re-created (the flaw the previous delete-then-create
-  * steal documented and round 11 closed). The capture is additionally
-  * RE-VALIDATED after the rename (round 12): a live lock caught by a
-  * stale expiry observation is renamed back untouched — see
-  * [[stealIfExpired]] for the contract and the residual micro-window.
-  * Only `FileAlreadyExistsException` counts as contention — any other
-  * IOException (permissions, disk full) propagates as the real failure
-  * it is. Multi-writer MERGE on an object store without atomic rename
-  * still wants a real transaction-log table format; this is the last
-  * stop before that territory.
+  * Writers serialize on a `{path}.lock` file with lease semantics
+  * ([[withLock]]):
+  *  - acquisition is an atomic create — `O_CREAT|O_EXCL` via NIO on
+  *    local filesystems (Hadoop's local `create(overwrite=false)` is a
+  *    non-atomic exists-then-create), `fs.create(…, false)` on
+  *    HDFS-semantics stores;
+  *  - a blocked writer retries with bounded backoff;
+  *  - a lock older than its lease is stolen by an atomic rename to a
+  *    stealer-unique name, re-validated after the rename
+  *    ([[stealIfExpired]]), so of several racing stealers exactly one
+  *    wins and a live lock is never deleted;
+  *  - release deletes only a lock carrying the releaser's own nonce.
+  * Only `FileAlreadyExistsException` counts as contention; any other
+  * IOException propagates. Multi-writer MERGE on an object store without
+  * atomic rename wants a transaction-log table format instead.
+  *
+  * Exactly-once folds (state plus processed-batch ledger in one commit)
+  * live in [[BucketedFoldStore]], which serializes on this lock.
   */
 object AtomicStore {
 
@@ -91,14 +84,13 @@ object AtomicStore {
     }
   }
 
-  /** Release a lock THIS acquisition created — never anyone else's
-    * (round-12 verdict #4). The old blind `fs.delete(lock)` had two
-    * corners: (a) if this holder overran its lease and was stolen, the
-    * delete killed the SUCCESSOR's live lock; (b) if a stealer had the
-    * lock parked aside mid-re-validation, the delete no-op'd and the
-    * put-back resurrected an ownerless lock that stalled acquirers for
-    * a full lease. Protocol — the same capture discipline as
-    * [[stealIfExpired]], pointed the other way:
+  /** Release a lock THIS acquisition created — never anyone else's. A
+    * blind `fs.delete(lock)` would (a) kill a successor's live lock if
+    * this holder overran its lease and was stolen, and (b) no-op while a
+    * stealer had the lock parked aside, letting the put-back resurrect
+    * an ownerless lock that stalls acquirers for a full lease. Protocol
+    * — the same capture discipline as [[stealIfExpired]], pointed the
+    * other way:
     *
     *   1. atomically RENAME the lock to a releaser-unique name (only an
     *      exclusively captured file is ever deleted);
@@ -110,10 +102,10 @@ object AtomicStore {
     *   3. a VACANT path retries briefly: vacancy means either our lock
     *      was stolen-and-deleted (nothing to release) or it is parked
     *      aside inside a stealer's microsecond re-validation window —
-    *      the bounded retry outlasts that window, so the resurrected
-    *      lock IS reclaimed and the round-12 ownerless-lock stall can
-    *      no longer happen. After the retries, vacancy is the
-    *      stolen-and-gone case: the thief owns cleanup, no-op.
+    *      the bounded retry outlasts that window, so the parked lock IS
+    *      reclaimed and no ownerless lock survives. After the retries,
+    *      vacancy is the stolen-and-gone case: the thief owns cleanup,
+    *      no-op.
     */
   private def releaseOwned(fs: FileSystem, lock: Path, nonce: String): Unit = {
     var attempt = 0
@@ -177,30 +169,27 @@ object AtomicStore {
     throw new IllegalStateException("unreachable: acquire loop exits via return/throw")
   }
 
-  /** ATOMIC steal of an EXPIRED lock (closes the round-10-documented
-    * delete-then-create race): move the lock aside to a stealer-unique
-    * name — rename is atomic on POSIX and HDFS-semantics stores, so of N
-    * racing stealers exactly ONE rename succeeds (the others see the
-    * source vanish and fall back to re-racing tryCreate).
+  /** ATOMIC steal of an EXPIRED lock (no delete-then-create race): move
+    * the lock aside to a stealer-unique name — rename is atomic on POSIX
+    * and HDFS-semantics stores, so of N racing stealers exactly ONE
+    * rename succeeds (the others see the source vanish and fall back to
+    * re-racing tryCreate).
     *
-    * The capture is RE-VALIDATED after the rename (round 12, closing the
-    * advice-flagged stale-observation TOCTOU): the caller's expiry stat
-    * and this rename are not one atomic step, so a holder release + fresh
-    * acquire in between would hand us a LIVE lock. Only a capture whose
-    * mtime is STILL past the lease is a corpse and gets deleted; a live
-    * capture is renamed straight back (the owner never noticed) and the
-    * steal reports failure — contention, not priority. The residual
-    * window is now the put-back race ALONE: if the put-back rename
-    * loses because a fresh acquirer took the vacant path inside that
-    * microsecond window, the orphaned aside copy is dropped and the
-    * fresh lock arbitrates. (The former dual corner — an owner
-    * releasing while its live lock sat parked aside, leaving the
-    * put-back to resurrect an ownerless lock — is closed by
-    * [[releaseOwned]]'s nonce-verified capture-retry, round-12 verdict
-    * #4.) That last window is what rename-only primitives cannot
-    * close — a store needing zero-window mutual exclusion wants a CAS
-    * lease service or a transaction-log table format, per the class
-    * doc.
+    * The capture is RE-VALIDATED after the rename: the caller's expiry
+    * stat and this rename are not one atomic step, so a holder release
+    * + fresh acquire in between would hand us a LIVE lock. Only a
+    * capture whose mtime is STILL past the lease is a corpse and gets
+    * deleted; a live capture is renamed straight back (the owner never
+    * noticed) and the steal reports failure — contention, not priority.
+    * The residual window is the put-back race ALONE: if the put-back
+    * rename loses because a fresh acquirer took the vacant path inside
+    * that microsecond window, the orphaned aside copy is dropped and the
+    * fresh lock arbitrates. (The dual corner — an owner releasing while
+    * its live lock sits parked aside — is covered by [[releaseOwned]]'s
+    * nonce-verified capture-retry.) That last window is what rename-only
+    * primitives cannot close — a store needing zero-window mutual
+    * exclusion wants a CAS lease service or a transaction-log table
+    * format, per the class doc.
     *
     * Returns true iff a corpse was removed (the caller may then race
     * tryCreate); false = the lock is live, back off.
@@ -315,7 +304,7 @@ object AtomicStore {
       fs.delete(lockOf(target), false)
     // a staging dir is only trustworthy once Spark's committer stamped it
     // (_SUCCESS): a crash MID-staging-write leaves a partial dir that must
-    // never be promoted (round-3 review: first-ever write, no target yet)
+    // never be promoted (also on a first-ever write, with no target yet)
     def stagingComplete = fs.exists(new Path(staging, "_SUCCESS"))
     if (!fs.exists(target) && fs.exists(staging) && stagingComplete) {
       // crashed between the renames: the staging copy is the completed merge
@@ -343,200 +332,6 @@ object AtomicStore {
       fs.exists(target) && hadLeftovers
     }
   }
-
-  /** Fold one ingestion batch into a store table EXACTLY ONCE per
-    * `batchId` — the processed-batch ledger the fold-style sinks
-    * (mergeable sketch / rollup stores) previously delegated to the
-    * caller (round-13 verdict #3: "a nightly pipeline retry
-    * double-counts").
-    *
-    * The ledger rides INSIDE the store table: one marker row per folded
-    * batch (every state column null, `__batch_id` set), so the single
-    * crash-safe [[overwrite]] swap commits the merged state AND the
-    * ledger entry atomically — there is no window where counts landed
-    * but the ledger did not, which two sibling tables could never
-    * guarantee without a transaction log. Under the writer lock: a
-    * `batchId` already in the ledger makes the whole fold a no-op
-    * (returns false); otherwise `merge(state, delta)` replaces the
-    * state rows and a marker for `batchId` joins the ledger (returns
-    * true). Readers use [[readState]] to see state rows only. The
-    * ledger grows one marker row per batch — 365/year against a
-    * state-table of any size — and [[compactLedger]] collapses old
-    * markers into a per-prefix watermark row when a higher-cadence
-    * caller (a 10-minute stream is 52k markers/year) needs the ledger
-    * bounded.
-    *
-    * COST (round-14 verdict): each fold's atomic swap REWRITES THE
-    * WHOLE STATE TABLE — the ledger is tiny, but the `overwrite` is
-    * O(state rows) per batch. That is the right trade for sketch- and
-    * rollup-sized state; a large keyed store folded frequently wants
-    * [[BucketedFoldStore.foldOnce]], which keeps the same exactly-once
-    * single-commit contract but rewrites only the hash buckets the
-    * delta touches — O(delta), not O(state).
-    *
-    * `delta` must not already contain a `__batch_id` column; `merge`
-    * receives (current state, delta) WITHOUT ledger columns and MUST
-    * return exactly `delta`'s column set (the marker row is built from
-    * `delta`'s schema and unioned by name with the merged state — a
-    * merge that renames, adds or drops a column is rejected loudly
-    * before any write, round-14 advice). A store written before the
-    * ledger existed (no `__batch_id` column) is adopted as all-state
-    * with an empty ledger on its first fold (round-14 advice: the
-    * legacy path used to fail with an AnalysisException).
-    */
-  def foldOnce(spark: SparkSession, storePath: String, batchId: String,
-               delta: DataFrame)
-              (merge: (DataFrame, DataFrame) => DataFrame): Boolean = {
-    import org.apache.spark.sql.functions.{col, lit}
-    require(!delta.columns.contains(LedgerCol),
-      s"foldOnce: delta already carries $LedgerCol")
-    require(!batchId.startsWith(WatermarkTag),
-      s"foldOnce: batch ids must not start with the reserved " +
-        s"watermark tag '$WatermarkTag' (got '$batchId')")
-    withLock(spark, storePath) {
-      recover(spark, storePath)
-      val tagged = delta.withColumn(LedgerCol, lit(null).cast("string"))
-      val base0 = BoxOfficePipeline.readOrEmpty(spark, storePath, tagged)
-      // legacy adoption: a pre-ledger store lacks the column — treat it
-      // as all-state with an empty ledger instead of failing
-      val base =
-        if (base0.columns.contains(LedgerCol)) base0
-        else base0.withColumn(LedgerCol, lit(null).cast("string"))
-      // one small driver collect over ledger rows only (exact hit +
-      // watermark rows), under the lock — the ledger is marker-sized
-      val ledgerHits = base
-        .filter(col(LedgerCol) === lit(batchId) ||
-          col(LedgerCol).startsWith(WatermarkTag))
-        .select(col(LedgerCol)).collect().map(_.getString(0))
-      val seen = ledgerHits.contains(batchId) || belowWatermark(batchId, ledgerHits)
-      if (!seen) {
-        val state = base.filter(col(LedgerCol).isNull).drop(LedgerCol)
-        val merged = merge(state, delta)
-        val expectedCols = tagged.columns.filter(_ != LedgerCol).sorted
-        require(merged.columns.sorted.sameElements(expectedCols),
-          "foldOnce: merge(state, delta) must return exactly delta's " +
-            s"column set ${expectedCols.mkString("(", ", ", ")")} — got " +
-            s"${merged.columns.sorted.mkString("(", ", ", ")")}; the " +
-            "ledger marker row is built from delta's schema, so a merge " +
-            "that renames/adds/drops columns cannot commit")
-        val newState = merged.withColumn(LedgerCol, lit(null).cast("string"))
-        val marker = spark.range(1).select(
-          tagged.schema.fields.filter(_.name != LedgerCol).map(f =>
-            lit(null).cast(f.dataType).as(f.name)).toSeq :+
-            lit(batchId).as(LedgerCol): _*)
-        val ledger = base.filter(col(LedgerCol).isNotNull)
-          .unionByName(marker)
-        overwrite(newState.unionByName(ledger), storePath)
-      }
-      !seen
-    }
-  }
-
-  /** Collapse old ledger markers into per-prefix WATERMARK rows so a
-    * high-cadence fold's ledger stays bounded (round-14 verdict #5: a
-    * 10-minute stream writes 52k markers/year through each swap).
-    *
-    * Markers shaped `<prefix>_<digits>` — the shape every streaming
-    * sink emits (`mb_17`, `night#mb_3`) — are grouped by prefix; all but
-    * the `retainLast` highest-numbered per prefix are replaced by ONE
-    * `wm#<prefix>#<maxCompacted>` row. [[foldOnce]] treats a batch id at
-    * or below its prefix's watermark as already-processed, so
-    * re-delivering a pre-watermark batch stays a no-op after compaction.
-    * Markers that don't parse are kept verbatim (never silently
-    * subsumed). One atomic swap, under the writer lock.
-    *
-    * CONTRACT: the watermark asserts every id `prefix_k` with
-    * k ≤ watermark was processed — sound only when ids below the
-    * retained tail were delivered contiguously, which Spark's
-    * monotonically increasing micro-batch ids guarantee. Don't compact
-    * a ledger whose numbered ids can arrive sparsely out of order.
-    *
-    * Returns the number of markers compacted away (0 = nothing to do,
-    * no rewrite performed).
-    */
-  def compactLedger(spark: SparkSession, storePath: String,
-                    retainLast: Int = 8): Int = {
-    import org.apache.spark.sql.functions.{col, lit}
-    require(retainLast >= 0, s"compactLedger: retainLast must be >= 0, got $retainLast")
-    withLock(spark, storePath) {
-      recover(spark, storePath)
-      val base = spark.read.parquet(storePath)
-      require(base.columns.contains(LedgerCol),
-        s"compactLedger: $storePath carries no $LedgerCol ledger column")
-      val markers = base.filter(col(LedgerCol).isNotNull)
-        .select(col(LedgerCol)).collect().map(_.getString(0))
-      val prior = markers.flatMap(parseWatermark).toMap
-      val (numbered, opaque) = markers.filterNot(_.startsWith(WatermarkTag))
-        .partition(m => parseSeq(m).isDefined)
-      val byPrefix = numbered.map(m => parseSeq(m).get).groupBy(_._1)
-      val compactable = byPrefix.map { case (p, ids) =>
-        p -> ids.map(_._2).sorted.dropRight(retainLast)
-      }.filter(_._2.nonEmpty)
-      if (compactable.isEmpty) 0
-      else {
-        val newWm = (prior.keySet ++ compactable.keySet).map { p =>
-          p -> math.max(prior.getOrElse(p, Long.MinValue),
-            compactable.get(p).map(_.max).getOrElse(Long.MinValue))
-        }.toMap
-        val keep = numbered.filter { m =>
-          val (p, n) = parseSeq(m).get
-          n > newWm.getOrElse(p, Long.MinValue)
-        } ++ opaque ++ newWm.map { case (p, n) => s"$WatermarkTag$p#$n" }
-        val stateFields = base.schema.fields.filter(_.name != LedgerCol)
-        val kept = spark.createDataset(keep.toSeq)(
-            org.apache.spark.sql.Encoders.STRING).toDF("__kept_id")
-          .select(stateFields.map(f =>
-            lit(null).cast(f.dataType).as(f.name)).toSeq :+
-            col("__kept_id").as(LedgerCol): _*)
-        val state = base.filter(col(LedgerCol).isNull)
-        overwrite(state.unionByName(kept), storePath)
-        compactable.values.map(_.length).sum
-      }
-    }
-  }
-
-  /** True iff `batchId` parses as `prefix_<n>` and some watermark row in
-    * `ledger` covers it (same prefix, n at or below the watermark).
-    */
-  private def belowWatermark(batchId: String, ledger: Array[String]): Boolean =
-    parseSeq(batchId).exists { case (p, n) =>
-      ledger.flatMap(parseWatermark).exists { case (wp, wn) => wp == p && n <= wn }
-    }
-
-  private val SeqId = "^(.*)_(\\d{1,18})$".r
-  private def parseSeq(id: String): Option[(String, Long)] = id match {
-    case SeqId(p, n) => Some((p, n.toLong))
-    case _           => None
-  }
-  private def parseWatermark(id: String): Option[(String, Long)] =
-    if (!id.startsWith(WatermarkTag)) None
-    else {
-      val body = id.stripPrefix(WatermarkTag)
-      val cut = body.lastIndexOf('#')
-      if (cut < 0) None
-      else scala.util.Try(body.substring(cut + 1).toLong).toOption
-        .map(n => (body.substring(0, cut), n))
-    }
-
-  /** The state rows of a [[foldOnce]] store: ledger markers stripped.
-    * A legacy pre-ledger store (no marker column) is returned as-is —
-    * it is all state.
-    */
-  def readState(spark: SparkSession, storePath: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val raw = spark.read.parquet(storePath)
-    if (raw.columns.contains(LedgerCol))
-      raw.filter(col(LedgerCol).isNull).drop(LedgerCol)
-    else raw
-  }
-
-  /** Ledger marker column of a [[foldOnce]] store. */
-  val LedgerCol = "__batch_id"
-
-  /** Reserved prefix of compacted-watermark ledger rows
-    * (`wm#<prefix>#<n>`); batch ids may not start with it.
-    */
-  val WatermarkTag = "wm#"
 
   private def stagingOf(p: Path) = new Path(p.getParent, p.getName + ".staging")
   private def oldOf(p: Path) = new Path(p.getParent, p.getName + ".old")

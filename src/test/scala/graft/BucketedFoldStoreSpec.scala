@@ -1,19 +1,20 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path => JPath, StandardCopyOption}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.pipelines.BucketedFoldStore
 
-/** The O(delta) exactly-once fold store (round-14 verdict #1): same
-  * single-commit state+ledger contract as `AtomicStore.foldOnce`, but a
-  * fold rewrites ONLY the hash buckets its delta touches. The gate face
-  * (`q_fold_bucketed_store`) oracle-checks the arithmetic on real data;
-  * this spec pins the store machinery itself: touched-bucket rewrite
-  * granularity, re-delivery no-ops, manifest atomicity, compaction
-  * watermarks, GC retention, and the key-local-merge guard.
+/** The exactly-once fold store: one manifest commit makes state and
+  * ledger visible together, and a fold rewrites ONLY the hash buckets
+  * its delta touches. The gate faces (`q_fold_bucketed_store`, the
+  * stored and streamed sketch faces) oracle-check the arithmetic on
+  * real data; this spec pins the store machinery itself:
+  * touched-bucket rewrite granularity, re-delivery no-ops, manifest
+  * atomicity, a crash after each file-system step of a fold,
+  * compaction watermarks, GC retention, and the key-local-merge guard.
   */
 class BucketedFoldStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -84,6 +85,19 @@ class BucketedFoldStoreSpec extends SparkSpec {
     assert(stateMap(path) == Map("a" -> 1L))
   }
 
+  test("one bucket: folds need no bucket discovery, empty deltas included") {
+    val path = store()
+    val empty = Seq.empty[(String, Long)].toDF("k", "n")
+    assert(fold(path, "e0", empty, buckets = 1))
+    assert(stateMap(path).isEmpty)
+    assert(fold(path, "b1", delta("a" -> 1L, "b" -> 2L), buckets = 1))
+    assert(fold(path, "e1", empty, buckets = 1))
+    assert(!fold(path, "b1", delta("a" -> 1L), buckets = 1))
+    assert(stateMap(path) == Map("a" -> 1L, "b" -> 2L))
+    assert(BucketedFoldStore.processed(spark, path, "e0") &&
+      BucketedFoldStore.processed(spark, path, "e1"))
+  }
+
   test("compaction: old and recent ids both stay no-ops; new ids still fold") {
     val path = store()
     assert(fold(path, "mb_0", delta("a" -> 1L)))
@@ -93,11 +107,17 @@ class BucketedFoldStoreSpec extends SparkSpec {
     // pre-watermark (compacted away) and recent (retained) — both no-op
     assert(!fold(path, "mb_0", delta("a" -> 100L)))
     assert(!fold(path, "mb_2", delta("a" -> 100L)))
-    // genuinely new id folds
+    // genuinely new ids fold; ids compare by number, not string order
+    // ("mb_10" < "mb_2" lexically, yet 10 is above the watermark)
     assert(fold(path, "mb_3", delta("a" -> 8L)))
-    assert(stateMap(path) == Map("a" -> 15L))
+    assert(fold(path, "mb_10", delta("a" -> 16L)))
+    assert(stateMap(path) == Map("a" -> 31L))
     // compacting again with nothing below the tail is a no-op
-    assert(BucketedFoldStore.compactLedger(spark, path, retainLast = 2) == 0)
+    assert(BucketedFoldStore.compactLedger(spark, path, retainLast = 3) == 0)
+    // compacting the whole tail keeps every id a no-op
+    assert(BucketedFoldStore.compactLedger(spark, path, retainLast = 0) == 3)
+    assert(!fold(path, "mb_10", delta("a" -> 100L)))
+    assert(stateMap(path) == Map("a" -> 31L))
     // non-conforming ids are never subsumed by a watermark
     assert(fold(path, "adhoc-backfill", delta("a" -> 1L)))
     assert(!fold(path, "adhoc-backfill", delta("a" -> 1L)))
@@ -144,6 +164,76 @@ class BucketedFoldStoreSpec extends SparkSpec {
     assert(fold(path, "b2", delta("a" -> 1L)))
     assert(stateMap(path) == Map("a" -> 2L))
     assert(!fs.exists(tmp))
+  }
+
+  /** Copy the files under `src` accepted by `keep` (store-relative
+    * path) into `dst`, preserving the tree.
+    */
+  private def copyTree(src: String, dst: String)(keep: String => Boolean): Unit = {
+    val from = java.nio.file.Paths.get(src)
+    val walk = Files.walk(from)
+    try walk.sorted().forEach { (p: JPath) =>
+      val rel = from.relativize(p).toString
+      val to = java.nio.file.Paths.get(dst).resolve(rel)
+      if (Files.isDirectory(p)) Files.createDirectories(to)
+      else if (keep(rel)) {
+        Files.createDirectories(to.getParent)
+        Files.copy(p, to, StandardCopyOption.REPLACE_EXISTING)
+      }
+    } finally walk.close()
+  }
+
+  test("a crash after each file-system step of a fold recovers to the no-crash state") {
+    // two folds over the same keys, so the third fold's GC has a
+    // superseded generation (manifest-1, data-g1) to sweep
+    val before = store() // the store the crashed fold meets
+    assert(fold(before, "b1", delta("a" -> 1L, "b" -> 2L, "c" -> 3L)))
+    assert(fold(before, "b2", delta("a" -> 1L, "b" -> 2L, "c" -> 3L)))
+    val id = "b3"
+    val d = delta("a" -> 10L, "d" -> 4L)
+    val after = store() // the same store once b3 folded without a crash
+    copyTree(before, after)(_ => true)
+    assert(fold(after, id, d))
+    val want = stateMap(after)
+    val gen = 3
+    val dataDir = s"data-g$gen"
+    val manifest = f"manifest-$gen%012d"
+    val swept = f"manifest-${gen - 2}%012d"
+    assert(!Files.exists(java.nio.file.Paths.get(after, swept)),
+      "the no-crash fold's GC should sweep the superseded manifest")
+    // each crash state = the files before the fold plus what the fold's
+    // steps had written when it stopped, taken from the no-crash run
+    val steps: Seq[(String, String => Unit, Boolean)] = Seq(
+      ("orphan data dir written", { crashed =>
+        copyTree(after, crashed)(_.startsWith(dataDir))
+      }, true),
+      ("manifest temp file written", { crashed =>
+        copyTree(after, crashed)(_.startsWith(dataDir))
+        Files.copy(java.nio.file.Paths.get(after, manifest),
+          java.nio.file.Paths.get(crashed, s".manifest-$gen.tmp"))
+        ()
+      }, true),
+      ("manifest committed, GC not run", { crashed =>
+        copyTree(after, crashed)(_ => true)
+      }, false))
+    for ((step, crash, refolds) <- steps) {
+      val crashed = store()
+      copyTree(before, crashed)(_ => true)
+      crash(crashed)
+      assert(BucketedFoldStore.processed(spark, crashed, id) == !refolds,
+        s"$step: ledger before the retry")
+      assert(fold(crashed, id, d) == refolds, s"$step: retry")
+      assert(!fold(crashed, id, d), s"$step: second retry")
+      assert(stateMap(crashed) == want, s"$step: state after the retry")
+      assert(BucketedFoldStore.processed(spark, crashed, id), step)
+      // the next fold commits and sweeps whatever the crash left behind
+      assert(fold(crashed, "b4", delta("a" -> 100L)), step)
+      assert(stateMap(crashed) == want + ("a" -> (want("a") + 100L)), step)
+      val left = new java.io.File(crashed).list().toSet
+      assert(!left.exists(_.endsWith(".tmp")), s"$step: temp manifest left: $left")
+      assert(!left.contains(swept) && !left.contains("data-g1"),
+        s"$step: superseded generation left: $left")
+    }
   }
 
   test("GC retains current and previous generations only") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.QuantileSketch
+import graft.pipelines.BucketedFoldStore
 
 /** The decimal-DDSketch quantile sketch: exact bucket arithmetic on
   * hand-computed fixtures (the integer/string path has no float to
@@ -120,35 +121,39 @@ class QuantileSketchSpec extends SparkSpec {
   }
 
   test("fold is exactly-once: a re-delivered batch id is a ledger no-op") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_qsketch_spec_").toString + "/store"
     val all = df(manyRows)
-    (0 to 2).foreach { i =>
-      val batch = all.filter(pmod(hash(col("x")), lit(3)) === i)
-      QuantileSketch.foldIntoStore(spark, batch, "x", Seq("g"), root,
-        s"batch_$i")
-      // retry storm: the same batch re-delivered twice more
-      QuantileSketch.foldIntoStore(spark, batch, "x", Seq("g"), root,
-        s"batch_$i")
-      QuantileSketch.foldIntoStore(spark, batch, "x", Seq("g"), root,
-        s"batch_$i")
+    // grouped and ungrouped: the fold keys include the bucket columns,
+    // so they are non-empty even without group columns
+    for (groups <- Seq(Seq("g"), Nil)) {
+      val root = java.nio.file.Files
+        .createTempDirectory("graft_qsketch_spec_").toString + "/store"
+      (0 to 2).foreach { i =>
+        val batch = all.filter(pmod(hash(col("x")), lit(3)) === i)
+        QuantileSketch.foldIntoStore(spark, batch, "x", groups, root,
+          s"batch_$i")
+        // retry storm: the same batch re-delivered twice more
+        QuantileSketch.foldIntoStore(spark, batch, "x", groups, root,
+          s"batch_$i")
+        QuantileSketch.foldIntoStore(spark, batch, "x", groups, root,
+          s"batch_$i")
+      }
+      val stored = QuantileSketch.readStore(spark, root)
+        .collect().map(_.toSeq).toSet
+      val oneShot = QuantileSketch.build(all, "x", groups)
+        .collect().map(_.toSeq).toSet
+      assert(stored == oneShot,
+        s"re-delivered folds double-counted despite the ledger (groups $groups)")
+      // each folded batch id is in the ledger; an unseen one is not
+      (0 to 2).foreach { i =>
+        assert(BucketedFoldStore.processed(spark, root, s"batch_$i"))
+      }
+      assert(!BucketedFoldStore.processed(spark, root, "batch_3"))
     }
-    val stored = QuantileSketch.readStore(spark, root)
-      .collect().map(_.toSeq).toSet
-    val oneShot = QuantileSketch.build(all, "x", Seq("g"))
-      .collect().map(_.toSeq).toSet
-    assert(stored == oneShot,
-      "re-delivered folds double-counted despite the ledger")
-    // the ledger keeps exactly one marker per distinct batch id
-    val markers = spark.read.parquet(root)
-      .filter(col("__batch_id").isNotNull)
-      .select("__batch_id").as[String].collect().sorted.toSeq
-    assert(markers == Seq("batch_0", "batch_1", "batch_2"), s"got $markers")
   }
 
   test("values past the DECIMAL(18,6) domain route to ±overflow buckets, not a throw") {
     // 1e13 and -3e14 are finite but beyond the decimal hop (~1e12);
-    // pre-round-14 these threw mid-scan under ANSI
+    // a plain cast would throw mid-scan under ANSI
     val vs = Seq(("a", 1.0e13), ("a", -3.0e14), ("a", 5.0),
       ("a", 8.9e11))                       // just inside the domain
     val got = QuantileSketch.build(df(vs), "x", Seq("g"))

@@ -15,6 +15,9 @@ the median per-query new/old ratio (benchdiff.host_factor), so a
 uniformly hot or cool host shifts nothing while a single structural
 1.5x regression still trips. --no-normalize restores raw gating.
 Queries missing from the baseline are reported as added, never failed.
+A run in which any face threw (a negative time, or a nonzero `n_failed`
+in the bench line) fails the gate: the thrown face is otherwise left
+out of both the comparison and `total_s`.
 """
 import glob, json, os, subprocess, sys
 
@@ -78,6 +81,13 @@ def main():
     baseline = baseline or newest_baseline()
     old = benchdiff.load(baseline)
     new = benchdiff.load(json_path) if json_path else run_bench(sf, passes)
+
+    failed = sorted(set(new.get("failed", [])) |
+                    {q for q, t in new.get("queries", {}).items() if t < 0})
+    if failed or new.get("n_failed", 0):
+        print(f"FAIL: {max(len(failed), new.get('n_failed', 0))} faces threw "
+              f"during the bench run: {failed}")
+        sys.exit(1)
 
     h = benchdiff.host_factor(old, new) if normalize else 1.0
     rows, worse = benchdiff.compare(old, new, pct, normalize=h)
